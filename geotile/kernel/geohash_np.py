@@ -464,6 +464,11 @@ def point_in_polygon(lat, lon, poly_lat, poly_lon) -> np.ndarray:
     nv = px.shape[0]
     j = nv - 1
     for i in range(nv):
+        if py[i] == py[j]:
+            # horizontal edge: no point straddles it, and the crossing
+            # abscissa below would divide by zero
+            j = i
+            continue
         cond = ((py[i] > lat) != (py[j] > lat)) & (
             lon < (px[j] - px[i]) * (lat - py[i]) / (py[j] - py[i]) + px[i]
         )

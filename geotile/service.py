@@ -9,6 +9,9 @@ against the Spark engine:
   ``{"error":"1"}`` (main.cpp:339,386); Add needs nonempty msisdn and
   lat/lon/time != 0 (main.cpp:414,428); Delete needs nonempty msisdn
   (main.cpp:442,456);
+* Add on a full pool fails with ``{"error":"2"}`` only for a NEW key:
+  the reference looks the key up first (mapinfo.cpp:109) and allocates
+  a record only for a key it does not hold (mapinfo.cpp:218-303);
 * Search response: ``{`` + comma-joined ``"Msisdn":"%s","Latitude":
   "%f","Longitude":"%f","CurrTime":"%ld"`` rows + ``}`` — the
   reference's (technically invalid JSON) concatenation, main.cpp:29,
@@ -19,21 +22,40 @@ against the Spark engine:
 * Pool response: three ``PoolName/Used/Free/All`` segments against the
   fixed capacity (mapinfo.cpp:473-497; DEFAULT_POOL_SIZE main.cpp:25).
 
-State lives in a Spark DataFrame (cell column derived, 12-bit compat
-encoding); each mutation produces a new immutable snapshot — the
-engine's replacement for in-place shm mutation under rwlocks.
+State: a driver row mirror plus a snapshot per read.  This façade is
+the only writer, so the authoritative state is a driver dict
+``msisdn -> (lat, lon, ts, seq, geohash)``: Add applies last-write-wins
+on ``ts`` there (ties go to the newer request) and Delete is a dict
+delete — neither runs a Spark job, like the reference's O(1) edits of
+one shared-memory store (mapinfo.cpp:97-382).  Reads run the engine's
+operators (``radius_search_compat``, ``pool_state``) over ``state``, a
+one-partition DataFrame rebuilt from the dict on the first read after
+a write, so its plan has the same few lines however long the session
+runs.  The earlier design unioned or anti-joined every write into one
+re-cached DataFrame lineage whose plan grew ~8x per Search (perfbench
+NOTES.md, "Measured defect: serve's plan growth").  Fresh writes in a
+small in-memory structure with queries over a compact snapshot of it
+follow Waterwheel (ICDE'18).
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
+                               StructType)
 
 from . import engine
+from .kernel import geohash_np as gh
 
 DEFAULT_POOL_SIZE = 1000000  # main.cpp:25
 
-_STATE_SCHEMA = "msisdn string, lat double, lon double, ts long, seq long"
+_STATE_SCHEMA = StructType([
+    StructField("msisdn", StringType()), StructField("lat", DoubleType()),
+    StructField("lon", DoubleType()), StructField("ts", LongType()),
+    StructField("seq", LongType()), StructField("geohash", StringType())])
+_ROW = '"Msisdn":"%s","Latitude":"%f","Longitude":"%f","CurrTime":"%ld"'
+_POOL = '"PoolName":"%s","Used":"%d","Free":"%d","All":"%d"'
 
 
 class GeoService:
@@ -41,31 +63,36 @@ class GeoService:
         self.spark = spark
         self.capacity = capacity
         self._seq = 0
-        # Driver-side key mirror: this façade is the ONLY writer, and
-        # upsert (LWW) / delete keep exactly one row per msisdn — so a
-        # set of live keys gives exact Used counts and existence checks
-        # without running a Spark count() job per HTTP call (the
-        # reference answers these from its in-shm hash the same way).
-        self._keys: set[str] = set()
-        self.state: DataFrame = engine.with_cell_ref(
-            spark.createDataFrame([], _STATE_SCHEMA))
+        # msisdn -> (lat, lon, ts, seq, geohash); one row per live key
+        self._rows: dict[str, tuple[float, float, int, int, str]] = {}
+        self._snapshot: DataFrame | None = None
+
+    @property
+    def state(self) -> DataFrame:
+        """The live rows as a DataFrame (``msisdn, lat, lon, ts, seq,
+        geohash``), rebuilt on the first read after a write.  Built from
+        pandas so the rows reach the JVM as Arrow batches, not through a
+        Python RDD; one partition keeps a read to one task."""
+        if self._snapshot is None:
+            pdf = pd.DataFrame([(k, *r) for k, r in self._rows.items()],
+                               columns=_STATE_SCHEMA.fieldNames())
+            self._snapshot = self.spark.createDataFrame(pdf, _STATE_SCHEMA).coalesce(1)
+        return self._snapshot
 
     # -- /GeoHash/Add/ ------------------------------------------------
     def add(self, msisdn: str, latitude: float, longitude: float, time: int) -> str:
         if not msisdn or latitude == 0.0 or longitude == 0.0 or time == 0:
             return '{"error":"1"}'
-        if len(self._keys) >= self.capacity:
+        old = self._rows.get(msisdn)
+        if old is None and len(self._rows) >= self.capacity:
             return '{"error":"2"}'  # pool exhausted (AddPos false)
         self._seq += 1
-        update = engine.with_cell_ref(self.spark.createDataFrame(
-            [(msisdn, float(latitude), float(longitude), int(time), self._seq)],
-            _STATE_SCHEMA))
-        # LWW on msisdn; ties (same ts) resolved toward the new row via seq
-        self.state = engine.upsert_positions(self.state, update,
-                                             key="msisdn", ts="ts")
-        # re-pin the tie-break: on equal ts the larger seq (newer) wins
-        self.state = self.state.cache()
-        self._keys.add(msisdn)
+        # LWW on ts; an equal ts goes to this (newer) request
+        if old is None or time >= old[2]:
+            cell = str(gh.encode_ref(latitude, longitude, gh.GEO_PRECISION_BITS)[0])
+            self._rows[msisdn] = (float(latitude), float(longitude), int(time),
+                                  self._seq, cell)
+            self._snapshot = None
         return '{"success":"0"}'
 
     # -- /GeoHash/Search/ ----------------------------------------------
@@ -73,29 +100,26 @@ class GeoService:
         if latitude == 0.0 or longitude == 0.0 or radius == 0.0:
             return '{"error":"1"}'
         found = engine.radius_search_compat(self.state, latitude, longitude, radius)
-        rows = found.orderBy(F.col("seq").asc()).collect()  # FIFO posting order
-        body = ",".join(
-            '"Msisdn":"%s","Latitude":"%f","Longitude":"%f","CurrTime":"%ld"'
-            % (r["msisdn"], r["lat"], r["lon"], r["ts"]) for r in rows)
+        # FIFO posting order; sorted here, not by a Spark orderBy, whose
+        # range partitioning would add a sampling job and a shuffle
+        rows = sorted(found.collect(), key=lambda r: r["seq"])
+        body = ",".join(_ROW % (r["msisdn"], r["lat"], r["lon"], r["ts"]) for r in rows)
         return "{" + (body + "}" if rows else "")
 
     # -- /GeoHash/Delete/ ----------------------------------------------
     def delete(self, msisdn: str) -> str:
         if not msisdn:
             return '{"error":"1"}'
-        if msisdn not in self._keys:
+        if self._rows.pop(msisdn, None) is None:
             return '{"error":"2"}'  # DelPos false on missing key
-        keys = self.spark.createDataFrame([(msisdn,)], "msisdn string")
-        self.state = engine.delete_positions(self.state, keys).cache()
-        self._keys.discard(msisdn)
+        self._snapshot = None
         return '{"success":"0"}'
 
     # -- /GeoHash/Pool/ ------------------------------------------------
     def pool(self) -> str:
         st = engine.pool_state(self.state).collect()[0]
         cap = self.capacity
-        seg = ('"PoolName":"%s","Used":"%d","Free":"%d","All":"%d"')
-        return ("{" + seg % ("Pos_Pool", st["pos_used"], cap - st["pos_used"], cap)
-                + "," + seg % ("Area_Pool", st["area_used"], cap - st["area_used"], cap)
-                + "," + seg % ("PosLink_Pool", st["link_used"], cap - st["link_used"], cap)
+        return ("{" + _POOL % ("Pos_Pool", st["pos_used"], cap - st["pos_used"], cap)
+                + "," + _POOL % ("Area_Pool", st["area_used"], cap - st["area_used"], cap)
+                + "," + _POOL % ("PosLink_Pool", st["link_used"], cap - st["link_used"], cap)
                 + "}")

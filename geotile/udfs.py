@@ -191,37 +191,6 @@ def annulus_cells_udf(nchars: int, r_lo: int, r_hi: int):
     return _ann
 
 
-def disk_cells_udf(nchars: int, ring: int):
-    """(lat, lon) -> array of the (2*ring+1)^2 cells of the Chebyshev
-    disk around the point's cell at ``nchars`` — the candidate
-    generator for the BULK kNN join (engine.knn_join_bulk), exploded
-    query-side so candidate generation is fully distributed.
-    Vectorized: one encode per offset over the whole Arrow batch."""
-
-    @pandas_udf(ArrayType(StringType()))
-    def _disk(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        la = lat.to_numpy(np.float64)
-        lo = lon.to_numpy(np.float64)
-        i_lat, i_lon, _ = gh.decode_ij(gh.encode(la, lo, nchars))
-        lat_bits, lon_bits = gh._axis_bits(nchars)
-        nlat = 1 << lat_bits
-        nlon = 1 << lon_bits
-        cols = []
-        for dla in range(-ring, ring + 1):
-            for dlo in range(-ring, ring + 1):
-                la_i = i_lat + dla
-                lo_i = (i_lon + dlo) % nlon
-                ok = (la_i >= 0) & (la_i < nlat)
-                s = np.empty(la.shape[0], dtype=object)
-                s[ok] = gh.encode_ij(la_i[ok], lo_i[ok], nchars)
-                s[~ok] = None
-                cols.append(s)
-        stacked = np.stack(cols, axis=1)
-        return pd.Series([[c for c in row if c is not None] for row in stacked])
-
-    return _disk
-
-
 def eps_cover_cells_udf(nchars: int, eps_m: float):
     """(lat, lon) -> all cells at ``nchars`` intersecting the point's
     eps-meter bounding box — the per-row candidate generator for the

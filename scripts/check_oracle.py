@@ -64,8 +64,10 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
+    n_ok = n_rows_only = n_filtered = 0
     for name, fn in qs.items():
         if args.only and args.only not in name:
+            n_filtered += 1
             continue
         t0 = time.time()
         try:
@@ -80,6 +82,7 @@ def main() -> int:
         if name not in oracles:
             print(f"ok-   {name}: rows-only ({len(srows)} rows, no oracle) "
                   f"[spark {t1 - t0:.1f}s]")
+            n_rows_only += 1
             continue
         try:
             ddf = con.sql(oracles[name]).df()
@@ -102,9 +105,11 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: {'; '.join(status)}")
         else:
+            n_ok += 1
             print(f"OK    {name}: {len(srows)} rows match [spark {t1 - t0:.1f}s, "
                   f"duck {time.time() - t1:.1f}s]")
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} pass")
+    print(f"\n{n_ok} OK, {len(failures)} FAIL, {n_rows_only} rows-only (no oracle), "
+          f"{n_filtered} filtered out by --only; {len(qs)} queries")
     return 1 if failures else 0
 
 

@@ -1,6 +1,8 @@
 """Golden-vector tests for the compat kernel vs the compiled reference
 (FIXTURES.md §2) plus sanity tests for the production kernel."""
 
+import warnings
+
 import numpy as np
 import pytest
 
@@ -240,6 +242,35 @@ def test_point_in_polygon():
     lon = np.array([0.5, 0.5, 0.5, 0.5])
     got = gh.point_in_polygon(lat, lon, poly_lat, poly_lon)
     assert list(got) == [True, False, True, False]
+
+
+def _pip_unguarded(lat, lon, poly_lat, poly_lon):
+    """The ray cast without the horizontal-edge skip, warnings silenced."""
+    px = np.asarray(poly_lon, dtype=np.float64)
+    py = np.asarray(poly_lat, dtype=np.float64)
+    inside = np.zeros(lat.shape[0], dtype=bool)
+    j = px.shape[0] - 1
+    with np.errstate(divide="ignore", invalid="ignore"):
+        for i in range(px.shape[0]):
+            inside ^= ((py[i] > lat) != (py[j] > lat)) & (
+                lon < (px[j] - px[i]) * (lat - py[i]) / (py[j] - py[i]) + px[i])
+            j = i
+    return inside
+
+
+def test_point_in_polygon_horizontal_edges_warn_free():
+    # axis-aligned square: two horizontal edges, probed on, inside and
+    # outside their latitudes
+    poly_lat = [10.0, 10.0, 20.0, 20.0]
+    poly_lon = [30.0, 40.0, 40.0, 30.0]
+    lat = np.array([15.0, 10.0, 20.0, 10.0, 20.0, 5.0, 25.0, 15.0, 15.0])
+    lon = np.array([35.0, 35.0, 35.0, 30.0, 40.0, 35.0, 35.0, 29.0, 41.0])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        with np.errstate(all="raise"):
+            got = gh.point_in_polygon(lat, lon, poly_lat, poly_lon)
+    assert list(got) == [True, True, False, True, False, False, False, False, False]
+    assert np.array_equal(got, _pip_unguarded(lat, lon, poly_lat, poly_lon))
 
 
 def test_haversine_sanity():
